@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession, GraftRegistrar}
 import org.apache.spark.sql.functions._
 import graft.model.{Pages, PolygonLayer}
+import graft.ops.SpatialJoin
 import graft.sql.{functions => G}
 import scala.collection.immutable.ListMap
 
@@ -297,16 +298,10 @@ object Queries {
 
   /** The headline PIP join: pages points × broadcast polygon layer,
     * bbox pre-filter + exact ray-cast refine (SURVEY.md §2.4). The polygon
-    * side is tiny → broadcast hash join, zero shuffle on the probe side;
+    * side is tiny → broadcast join, zero shuffle on the probe side;
     * per-polygon aggregation is the only exchange. */
   def pipJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = Pages.volumePages(spark, sfDir)
-    val polys = PolygonLayer.toDF(spark)
-    pages.join(
-        broadcast(polys),
-        col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-          col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-          G.st_contains_xy(col("poly"), col("lon"), col("lat")))
+    SpatialJoin.broadcast(Pages.volumePages(spark, sfDir), PolygonLayer.toDF(spark))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n"),
         min(col("pid")).as("min_pid"),

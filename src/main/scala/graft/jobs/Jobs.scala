@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.lake.{LakeTable, StageRunner}
 import graft.model.{Pages, PolygonLayer}
+import graft.ops.SpatialJoin
 import graft.sql.{functions => G}
 
 /** The headline checkpointed jobs (north rule): every stage commits data +
@@ -17,7 +18,6 @@ object SpatialJoinJob {
     * salted cell-equi shuffle plan (adaptive broadcast-vs-shuffle
     * selection; AQE remains the runtime second line). */
   val BroadcastRowThreshold = 100000L
-  val SaltBuckets = 8
 
   def run(spark: SparkSession, sfDir: String, lakeRoot: String): DataFrame = {
     val lake = new LakeTable(lakeRoot)
@@ -32,28 +32,9 @@ object SpatialJoinJob {
     val polys = PolygonLayer.toDF(spark)
 
     val joined = StageRunner.stage(spark, lake, "s2_pip_join") {
-      val polyCount = polys.count()
-      if (polyCount <= BroadcastRowThreshold) {
-        // broadcast plan: zero shuffle on the probe side
-        pages.join(broadcast(polys),
-          col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-            col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-            G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-          .select(col("pid"), col("poly_id"), col("is_hot"))
-      } else {
-        // salted cell-equi shuffle join: explode polygons into z8 cover
-        // cells replicated across salt buckets; pages salt by hash(pid).
-        val polyCells = polys
-          .select(col("poly_id"), col("poly"),
-            G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-          .crossJoin(spark.range(SaltBuckets).select(col("id").cast("int").as("salt")))
-        val salted = pages
-          .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-          .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
-        salted.join(polyCells, Seq("cell8", "salt"))
-          .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-          .select(col("pid"), col("poly_id"), col("is_hot"))
-      }
+      val pip = if (polys.count() <= BroadcastRowThreshold) SpatialJoin.broadcast(pages, polys)
+        else SpatialJoin.shuffled(pages, polys)
+      pip.select(col("pid"), col("poly_id"), col("is_hot"))
     }
 
     StageRunner.stage(spark, lake, "s3_agg") {

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Pages, PolygonLayer}
-import graft.sql.{functions => G}
+import graft.ops.SpatialJoin
 
 /** Anti-join and range-join coverage (SURVEY.md §2.4 join taxonomy). */
 object JoinQueries {
@@ -11,12 +11,7 @@ object JoinQueries {
   /** pages NOT inside any polygon: broadcast LEFT ANTI with the PIP
     * predicate — the "outside all regions" filter. */
   def antiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = Pages.volumePages(spark, sfDir)
-    val polys = PolygonLayer.toDF(spark)
-    pages.join(broadcast(polys),
-        col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-          col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-          G.st_contains_xy(col("poly"), col("lon"), col("lat")),
+    SpatialJoin.broadcast(Pages.volumePages(spark, sfDir), PolygonLayer.toDF(spark),
         "left_anti")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"))
@@ -65,27 +60,13 @@ object JoinQueries {
 
   /** The SHUFFLE spatial join plan under the oracle (VERDICT r1 #6): a
     * 20k-box layer is far beyond broadcast-NLJ territory, so the plan is
-    * the salted cell-equi join of SpatialJoinJob's big branch — polygons
-    * exploded into their z8 cover cells and replicated across salt
-    * buckets, pages salted by hash(pid), equi-join on (cell8, salt), exact
-    * box refine after the join. shuffle_hash hint pins the non-broadcast
-    * path so the gate hashes the scale plan, not the small-layer one. */
+    * `SpatialJoin.shuffled`, SpatialJoinJob's big branch — the salted
+    * cell-equi join pinned to a shuffled hash join, so the gate hashes the
+    * scale plan, not the small-layer one. The layer has no `poly`, so the
+    * box test after the join is the exact refine. */
   def shufflePip(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.jobs.SpatialJoinJob.SaltBuckets
-    val pages = Pages.volumePages(spark, sfDir)
-      .select(col("pid"), col("lon"), col("lat"),
-        G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-      .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-      .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
-    val polyCells = shuffleLayer(spark)
-      .select(col("poly_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax"),
-        G.tiles_for(G.st_makebbox(col("xmin"), col("ymin"), col("xmax"), col("ymax")),
-          array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-      // salt replication via explode, not a crossJoin (no NLJ in the plan)
-      .withColumn("salt", explode(array((0 until SaltBuckets).map(s => lit(s)): _*)))
-    pages.join(polyCells.hint("shuffle_hash"), Seq("cell8", "salt"))
-      .where(col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-        col("lat") >= col("ymin") && col("lat") <= col("ymax"))
+    val pages = Pages.volumePages(spark, sfDir).select(col("pid"), col("lon"), col("lat"))
+    SpatialJoin.shuffled(pages, shuffleLayer(spark))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),
         max(col("pid")).as("max_pid"))

@@ -2,6 +2,8 @@ package graft.lake
 
 import graft.sql.SparkTestBase
 import graft.jobs.{KnnJob, PyramidJob, SpatialJoinJob}
+import graft.model.{Pages, PolygonLayer}
+import graft.ops.SpatialJoin
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -230,37 +232,15 @@ class LakeSpec extends SparkTestBase {
   }
 
   test("salted shuffle plan produces identical rows to the broadcast plan") {
-    val root1 = freshRoot("bc")
-    val broadcastRows = SpatialJoinJob.run(spark, sf, root1)
+    val broadcastRows = SpatialJoinJob.run(spark, sf, freshRoot("bc"))
       .orderBy("poly_id").collect().map(_.toSeq).toSeq
-    // force the salted path by dropping the broadcast threshold
-    val root2 = freshRoot("salt")
-    val saved = SpatialJoinJob.BroadcastRowThreshold
-    val shuffled = {
-      // re-run the salted branch directly (threshold is a val — drive the
-      // branch through its internals)
-      val lake = new graft.lake.LakeTable(root2)
-      import graft.model.{Pages, PolygonLayer}
-      import graft.sql.{functions => G}
-      val pages = Pages.volumePages(spark, sf)
-        .select(col("pid"), col("lon"), col("lat"), col("is_hot"),
-          G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-      val polys = PolygonLayer.toDF(spark)
-      val polyCells = polys
-        .select(col("poly_id"), col("poly"),
-          G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-        .crossJoin(spark.range(SpatialJoinJob.SaltBuckets).select(col("id").cast("int").as("salt")))
-      val salted = pages
-        .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-        .withColumn("salt", pmod(hash(col("pid")), lit(SpatialJoinJob.SaltBuckets)).cast("int"))
-      salted.join(polyCells, Seq("cell8", "salt"))
-        .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-        .groupBy(col("poly_id"))
-        .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),
-          max(col("pid")).as("max_pid"),
-          sum(when(col("is_hot"), 1L).otherwise(0L)).as("n_hot"))
-        .orderBy(col("poly_id")).collect().map(_.toSeq).toSeq
-    }
+    // SpatialJoinJob's salted branch over the same points and polygon layer
+    val shuffled = SpatialJoin.shuffled(Pages.volumePages(spark, sf), PolygonLayer.toDF(spark))
+      .groupBy(col("poly_id"))
+      .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),
+        max(col("pid")).as("max_pid"),
+        sum(when(col("is_hot"), 1L).otherwise(0L)).as("n_hot"))
+      .orderBy(col("poly_id")).collect().map(_.toSeq).toSeq
     assert(shuffled === broadcastRows)
   }
 
@@ -270,7 +250,6 @@ class LakeSpec extends SparkTestBase {
     val out = KnnJob.run(spark, sf, probes, k = 10, zoom = 6, lakeRoot = root)
     val got = out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     // exact reference ranking via full scan
-    import graft.model.Pages
     val pages = Pages.volumePages(spark, sf).select("pid", "lon", "lat").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val expected = probes.flatMap { case (q, qx, qy) =>
